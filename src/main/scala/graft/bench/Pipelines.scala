@@ -2,6 +2,7 @@ package graft.bench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.core.SeriesOps
 import graft.events.Events
@@ -429,15 +430,9 @@ object Pipelines {
           case "enhanced_bsts" =>
             runEnhancedBsts(series, labels, key, ts, value, cfg)
         }
-        Some(metrics
-          .select(lit(m.toUpperCase).as("Model"),
-            col(key).cast("string").as("Dataset"),
-            col("f1").as("Event_F1"), col("precision").as("Precision"),
-            col("recall").as("Recall"),
-            col("fp_per_day").as("FP_per_Day"),
-            col("median_latency_minutes").as("Latency_Min")))
+        Some(leaderboardRows(m, metrics, key))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass)
             .warn(s"model $m failed: ${e.getMessage}")
           None
@@ -445,6 +440,17 @@ object Pipelines {
     }
     Metrics.leaderboard(runs)
   }
+
+  /** One model's leaderboard rows: its per-series metrics record
+    * projected onto the leaderboard columns. */
+  private[bench] def leaderboardRows(model: String, metrics: DataFrame,
+                                     key: String): DataFrame =
+    metrics.select(lit(model.toUpperCase).as("Model"),
+      col(key).cast("string").as("Dataset"),
+      col("f1").as("Event_F1"), col("precision").as("Precision"),
+      col("recall").as("Recall"),
+      col("fp_per_day").as("FP_per_Day"),
+      col("median_latency_minutes").as("Latency_Min"))
 
   /** S3/S4 sinks for one run: predictions go to series-partitioned
     * parquet (parallel write, no single-task exchange); the metrics

@@ -1,61 +1,29 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
-/** Engine session tuning — kept as the one place a session-wide AQE
-  * knob lives, now STOCK by default (OPTIMIZATION_r19.md §1).
-  *
-  * History: Spark's AQE partition coalescing picks the post-shuffle
-  * partition count from SHUFFLE BYTES — with `parallelismFirst=true`
-  * (default) the target size is `max(totalShuffleBytes /
-  * defaultParallelism, minPartitionSize)` and the `minPartitionSize`
-  * floor defaults to 1 MB. This engine's heavy operators shuffle
-  * kilobytes of keys/series into CPU-dominated work (per-series model
-  * MLEs, pair-exploding bucket joins), so the byte heuristic starved
-  * them: at sf0.1 the 1.8 MB events shuffle coalesced to 2 partitions
-  * and ran a 1500-series GP fit on two cores. r18 lowered the floor to
-  * 256k session-wide, which restored those operators 2–6x — but the
-  * driver's 32-core run then measured the MANY-STAGE query family
-  * blowing up 4–8x under host contention (q_sweep_curve 2.5 → 19.8 s,
-  * bimodal medians; absent at 8 cores): hundreds of tiny shuffles ×
-  * 4–8x more tasks per stage is a fragility tax a session conf cannot
-  * scope (VERDICT r18 #1).
-  *
-  * r19 therefore moved the parallelism fix to the starved operators
-  * themselves — `core/Grouped.pinned` gives every per-series
-  * `mapGroups` model an AQE-proof pinned exchange, and the pair-join
-  * explosion sites pin their join-input partitioning the same way
-  * (the `Dedup.simhashCandidatesFromFps` pattern) — and the session
-  * floor is back to the STOCK 1m: many-stage queries get stock AQE
-  * task counts, CPU-heavy operators no longer need the floor at all.
-  * `SPARK_GRAFT_MIN_COALESCE` stays parameterised for A/B-ing the
-  * session-wide effect itself (the r19 adjudication data: 256k vs 1m
-  * full-sweep records in OPTIMIZATION_r19.md §1).
+/** Engine-wide SQL tuning: the session confs that differ from Spark's
+  * defaults ([[Session]] applies them). Post-shuffle parallelism is not
+  * tuned here: AQE's partition coalescing stays stock, and the
+  * CPU-heavy operators it would starve pin their own partitioning
+  * (`core/Grouped`; OPTIMIZATION_r19.md §1 has the session-wide
+  * alternative and why it was dropped).
   */
 object EngineTuning {
 
-  def conf: Map[String, String] = Map(
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"),
+  val conf: Map[String, String] = Map(
     // The engine's bit-exactness contract makes every oracle-checked
     // float sum an ORDERED fold (core/Folds: aggregate over
     // array_sort(collect_list(...))) — a typed-buffer aggregate that
     // plans as ObjectHashAggregate. Stock Spark falls that operator
     // back to SORT-based aggregation after only 128 distinct keys per
-    // task (spark.sql.objectHashAggregate.sortBased.fallbackThreshold),
-    // so every fold-heavy stage (BM25 scoring, graph contribution
-    // sums, LOF reach folds) was paying a full per-task sort of its
-    // input (r19 profile: `numTasksFallBacked` on every such stage).
-    // 4096 keeps realistic per-(query,doc)/per-node group counts in
-    // the hash path; per-key buffers stay bounded by the operators'
-    // own contracts (salt buckets cap fold width, top-k caps lists),
-    // so the memory exposure is keys×boundedList — the same order the
-    // sort path buffers anyway. Results are identical by construction:
-    // every collect_list here is sorted before folding.
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK", "4096"))
-
-  /** Apply the tuning confs to a builder (chainable). */
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    // task, so every fold-heavy stage (BM25 scoring, graph contribution
+    // sums, LOF reach folds) paid a full per-task sort of its input
+    // (r19 profile: `numTasksFallBacked` on every such stage). 4096
+    // keeps realistic per-(query,doc)/per-node group counts in the hash
+    // path. The hash path holds every group's buffer in memory until
+    // the threshold trips, so a `collect_list` group with no size limit
+    // is held whole: memory is not bounded by this setting. Results are
+    // identical either way: every collect_list here is sorted before
+    // folding. Keeping 4096 over the stock 128 is not yet settled by an
+    // A/B record.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096")
 }

@@ -50,9 +50,8 @@ object Grouped {
   /** Stock shuffle parallelism, never below the core count. */
   def pinnedPartitions(ds: Dataset[_]): Int = {
     val sess = ds.sparkSession
-    val conf = try sess.conf.get("spark.sql.shuffle.partitions").toInt
-    catch { case _: Throwable => 0 }
-    math.max(conf, sess.sparkContext.defaultParallelism)
+    math.max(sess.conf.get("spark.sql.shuffle.partitions").toInt,
+      sess.sparkContext.defaultParallelism)
   }
 
   /** `ds.groupByKey(row => key(row))` with pinned parallelism: one

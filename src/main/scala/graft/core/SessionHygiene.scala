@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
 /** Long-session hygiene — the conf a session that will run HUNDREDS of
   * queries (a bench sweep, a pipeline service, a notebook kernel that
   * lives for days) should start with.
@@ -26,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   * These caps keep enough history for live debugging (the last ~50
   * queries) while bounding the store at a size whose bookkeeping is
   * invisible to query wall time. They are STATIC confs — listeners read
-  * them at SparkContext start — so they must be applied on the builder,
-  * not `spark.conf.set`.
+  * them at SparkContext start — so [[Session]] applies them on the
+  * builder, not through `spark.conf.set`.
   */
 object SessionHygiene {
 
@@ -36,8 +34,4 @@ object SessionHygiene {
     "spark.ui.retainedStages" -> "200",
     "spark.ui.retainedTasks" -> "5000",
     "spark.sql.ui.retainedExecutions" -> "50")
-
-  /** Apply the long-session caps to a builder (chainable). */
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }

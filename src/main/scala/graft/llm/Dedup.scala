@@ -627,7 +627,7 @@ object Dedup {
     // coalesced the aggregate output (measured r18: one coalesced
     // partition ran the 28.6M-probe join single-threaded, 5.9 s of an
     // 8.6 s query).
-    // eager=false (ADVICE r18): plan-only consumers (PlanDump/explain)
+    // eager=false (ADVICE r18): plan-only consumers (explain)
     // must not pay a full tokenize+fingerprint job at DataFrame-
     // construction time; the first ACTION materializes the checkpoint,
     // and both join sides still share the one materialized copy.

@@ -19,7 +19,7 @@ import graft.models.DetKMeans
   * neighbors at cosine 0.26-0.40): measured recall 0.93 at
   * oversample 8 vs 0.6 for m=8/ksub=16 — on a corpus with a real
   * similarity gap the coarser, smaller-code settings suffice
-  * (`graft.tools.PqProbe` sweeps the grid).
+  * (the grid sweep, `graft.tools.PqProbe`, is in the git history).
   *
   * Search is asymmetric distance computation (ADC): per query, an
   * `m × ksub` table of exact sub-distances to every codeword is

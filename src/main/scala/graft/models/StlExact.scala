@@ -246,9 +246,9 @@ object StlExact {
 
   /** DataFrame pipeline. `robust = true` runs the statsmodels-default
     * robust budget (inner 2, outer 15 — calibrated against the stored
-    * statsmodels output, see StlCalibProbe: max per-point delta 2e-8 on
-    * NYC-Taxi); `robust = false` the statsmodels non-robust budget
-    * (inner 5, outer 0). */
+    * statsmodels output by the StlCalibProbe in the git history: max
+    * per-point delta 2e-8 on NYC-Taxi); `robust = false` the
+    * statsmodels non-robust budget (inner 5, outer 0). */
   def decompose(df: DataFrame, series: String, ts: String, value: String,
                 period: Int, robust: Boolean = true): DataFrame = {
     val spark = df.sparkSession

@@ -135,4 +135,45 @@ class PipelinesSpec extends SparkSpec {
     f1s.sliding(2).foreach { case Array(x, y) => assert(x >= y - 1e-12) }
     assert(f1s.max > 0.5, s"best F1 ${f1s.max}")
   }
+
+  test("benchmark runner's leaderboard rows equal the persisted metrics") {
+    // one fit per model: every leaderboard row must be the record the
+    // persist loop wrote, for models the second dispatch table of
+    // runFinalBenchmark lacks (stl_exact) or fits differently (ar)
+    val (s0, l0) = fixture
+    val series = s0.withColumnRenamed("series_id", "user_id")
+    val labels = l0.withColumnRenamed("series_id", "user_id")
+    val models = Seq("stl_exact", "ar")
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    try {
+      val lb = BenchmarkRunner.run(series, labels, dir, models,
+        Pipelines.Config(period = 24, rollingWindow = 24)).collect()
+      assert(lb.length === 4) // 2 models x 2 series
+      val cols = Seq("Event_F1" -> "f1", "Precision" -> "precision",
+        "Recall" -> "recall", "FP_per_Day" -> "fp_per_day",
+        "Latency_Min" -> "median_latency_minutes")
+      for (m <- models) {
+        val persisted = spark.read.json(s"$dir/$m/events/metrics")
+        val recs = persisted.collect()
+        assert(recs.length === 2, s"$m persisted ${recs.length} records")
+        recs.foreach { r =>
+          val sid = r.getAs[String]("user_id")
+          val rows = lb.filter(x => x.getAs[String]("Model") ==
+            m.toUpperCase && x.getAs[String]("Dataset") == sid)
+          assert(rows.length === 1, s"$m/$sid leaderboard rows")
+          cols.foreach { case (lc, mc) =>
+            val want =
+              if (!persisted.columns.contains(mc) || r.isNullAt(r.fieldIndex(mc)))
+                None
+              else Some(r.getAs[Any](mc).toString.toDouble)
+            val got = Option(rows.head.getAs[Any](lc))
+              .map(_.toString.toDouble)
+            assert(got === want, s"$m/$sid $lc")
+          }
+        }
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }

@@ -1,14 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the long-session store caps (the r17 session-aging fix): the
-  * conf set must cover exactly the four unbounded-growth stores, every
-  * cap must be strictly below Spark's default (otherwise the "cap" is
-  * a no-op), and apply() must hand every pair to the builder. The
-  * effect on a live sweep is verified by the bench instrument itself
-  * (anchors_mid in BENCH_DEF; hygiene:true in the record line).
+  * conf set must cover exactly the four unbounded-growth stores, and
+  * every cap must be strictly below Spark's default (otherwise the "cap"
+  * is a no-op). SessionSpec checks that the session builder applies
+  * them.
   */
 class SessionHygieneSpec extends AnyFunSuite {
 
@@ -24,27 +22,6 @@ class SessionHygieneSpec extends AnyFunSuite {
     SessionHygiene.conf.foreach { case (k, v) =>
       assert(v.toInt > 0 && v.toInt < sparkDefaults(k),
         s"$k=$v must be a real cap (0 < cap < default ${sparkDefaults(k)})")
-    }
-  }
-
-  test("apply() hands every cap to the builder") {
-    // the builder exposes no getter; verify via the private options
-    // map. Spark versions move the field between Builder and its
-    // SparkSessionBuilder superclass, so walk the hierarchy instead of
-    // hard-coding one location (a fixed getSuperclass breaks silently
-    // with NoSuchFieldException on the other layout).
-    val b = SessionHygiene(SparkSession.builder())
-    val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
-      .takeWhile(_ != null)
-      .flatMap(c => scala.util.Try(c.getDeclaredField("options")).toOption)
-      .nextOption()
-      .getOrElse(fail("no 'options' field anywhere in the builder " +
-        "class hierarchy — Spark renamed it; update this probe"))
-    f.setAccessible(true)
-    val opts = f.get(b).asInstanceOf[
-      scala.collection.mutable.HashMap[String, String]]
-    SessionHygiene.conf.foreach { case (k, v) =>
-      assert(opts.get(k).contains(v), s"builder lost $k")
     }
   }
 }

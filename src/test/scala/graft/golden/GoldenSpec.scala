@@ -246,7 +246,8 @@ class GoldenSpec extends SparkSpec {
       sum("detected").cast("double") / count(lit(1))).collect().head.getDouble(0)
     info(f"dummy-BSTS flag rate $flags%.3f (reference artifact: 0.943)")
     // Why 0.99 and not the artifact's 0.943 — adjudicated in round 8
-    // (see graft.models.BstsFitProbe, Test/runMain): the flag rate is
+    // (the basin probe, models/BstsFitProbe.scala, is in the git
+    // history): the flag rate is
     // INSENSITIVE to the MLE optimum. Coordinate rounds 2/3/4 and a
     // 108-point basin grid reach optima with h spanning 144.8 → 9e-4
     // (LML -42796.7 → -42742.4, a 0.13% ridge) and every one of them
@@ -523,8 +524,9 @@ class GoldenSpec extends SparkSpec {
     // The netlib-port decomposition against the notebook's own stored
     // statsmodels STL(period=48, robust=True) output on NYC-Taxi: every
     // trend/seasonal value within 1e-6 absolute on a ~20,000-amplitude
-    // series (measured max delta 2e-8 — float64 round-off, see
-    // StlCalibProbe). This is the round-8 upgrade of the STL golden
+    // series (measured max delta 2e-8 — float64 round-off; the
+    // calibration probe models/StlCalibProbe.scala is in the git
+    // history). This is the round-8 upgrade of the STL golden
     // from tolerance to exact (SURVEY §7.4(3) delta closed).
     val dir = "/root/reference/notebooks/results/stl/realKnownCause__nyc_taxi.csv"
     val ref = spark.read.option("header", "true").csv(s"$dir/stl_results.csv")
