@@ -29,7 +29,13 @@ object Pipelines {
     * duplicates the whole upstream plan subtree and Catalyst analysis
     * goes quadratic-to-exponential (measured: minutes of driver CPU on
     * a 400-row fixture). `localCheckpoint` materializes and cuts the
-    * plan; on a cluster the same barrier would be a persisted table. */
+    * plan; on a cluster the same barrier would be a persisted table.
+    *
+    * Bind the barriered value once and have EVERY consumer join it,
+    * never the lazy original: a consumer of the lazy frame re-runs its
+    * whole plan on each materialization (a `metrics` frame joining the
+    * lazy sweep result would re-run the 17-k threshold sweep in both the
+    * metrics JSON write and the leaderboard write). */
   private def barrier(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
@@ -97,16 +103,17 @@ object Pipelines {
     val tune = scored.filter(col("split") === tuneSplit)
     val truthTune = Events.eventize(tune, Seq(series), ts, "is_anomaly",
       cfg.gap)
-    val best = Metrics.sweep(tune.select(col(series), col(ts), col("score")),
+    val best = barrier(Metrics.sweep(
+      tune.select(col(series), col(ts), col("score")),
       Seq(series), ts, "score", cfg.ks, cfg.persistence, cfg.gap,
-      truthTune, cfg.maxRate)
+      truthTune, cfg.maxRate))
     // apply the winning k on the Test split; a series where EVERY
     // candidate failed the rate guard has no sweep row — the reference
     // scripts then keep their initial k = 3.0 (run_gp.py:90 et al.), so
     // the join is left + coalesce rather than inner (which would
     // silently drop the series from the predictions)
     val test = scored.filter(col("split") === "Test")
-      .join(broadcast(barrier(best).select(col(series), col("best_k"))),
+      .join(broadcast(best.select(col(series), col("best_k"))),
         Seq(series), "left")
       .withColumn("flag",
         SeriesOps.thresholdFlag(col("score"),
@@ -298,14 +305,14 @@ object Pipelines {
     val tune = combined.filter(col("split") === "Test")
     val truthTune = Events.eventize(tune, Seq(key), ts, "is_anomaly",
       cfg.gap)
-    val best = Metrics.sweep(
+    val best = barrier(Metrics.sweep(
       tune.select(col(key), col(ts), col("combined_score")), Seq(key), ts,
       "combined_score", cfg.ks, cfg.persistence, cfg.gap, truthTune,
-      cfg.maxRate)
+      cfg.maxRate))
     // left + coalesce: the reference's initial best_thresh = 3.0 applies
     // when the rate guard rejects every candidate (run_hybrid.py:145)
     val test = tune
-      .join(broadcast(barrier(best).select(col(key), col("best_k"))),
+      .join(broadcast(best.select(col(key), col("best_k"))),
         Seq(key), "left")
       .withColumn("flag",
         SeriesOps.thresholdFlag(col("combined_score"),

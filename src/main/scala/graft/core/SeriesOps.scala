@@ -41,21 +41,25 @@ object SeriesOps {
     * Reference: `iloc[:int(n*frac)]` (kalman_model.py:168-171) and the
     * 3-way variant (run_bsts.py:31-35). valFrac=0 gives 2-way splits.
     *
-    * Scale note: per-series row counts come from a partial-aggregated
-    * groupBy broadcast back onto the fact table — one ordered window pass
-    * total, instead of a second unbounded-frame window over every row.
+    * Scale note: one window pass plus the count window — the per-series
+    * row count is `count` over the same series partitioning as the
+    * `row_number` window, so both share one exchange and one sort, with
+    * no groupBy and no join back onto the fact table.
+    *
+    * Rows with a null series key are dropped (q_split's oracle filters
+    * them the same way) and the series key leads the output columns.
     */
   def withSplit(df: DataFrame, series: String, ts: String,
                 trainFrac: Double, valFrac: Double = 0.0,
                 out: String = "split"): DataFrame = {
     val rn = row_number().over(bySeries(series, ts))
-    val n = df.groupBy(series).agg(count(lit(1)).as("__n"))
-    df.join(broadcast(n), Seq(series))
+    val n = count(lit(1)).over(Window.partitionBy(series))
+    df.filter(col(series).isNotNull)
+      .select(col(series) +: df.columns.filter(_ != series).map(col): _*)
       .withColumn(out,
-        when(rn <= floor(col("__n") * lit(trainFrac)), lit("Train"))
-          .when(rn <= floor(col("__n") * lit(trainFrac + valFrac)), lit("Validation"))
+        when(rn <= floor(n * lit(trainFrac)), lit("Train"))
+          .when(rn <= floor(n * lit(trainFrac + valFrac)), lit("Validation"))
           .otherwise(lit("Test")))
-      .drop("__n")
   }
 
   /** W1/W2/W3: trailing rolling mean + sample-std over `window` rows with

@@ -103,6 +103,12 @@ object Events {
     * evaluate.py:83-109. Inputs are eventize() outputs.
     * Output: one row per key-group with tp/fp/fn/precision/recall/f1 and
     * event counts. `eps` matches the reference's 1e-9 guards.
+    *
+    * One aggregation: pred events, true events and the survivors of the
+    * two overlap semi-joins are tagged with a 0/1 per counter, unioned,
+    * and summed in a single groupBy(keys). A null key never equi-joins,
+    * so its group carries zero counts, as in the SQL formulation
+    * (q_event_metrics' oracle: key union, then LEFT JOIN USING).
     */
   def eventLevelMetrics(pred: DataFrame, truth: DataFrame, keys: Seq[String],
                         eps: Double = 1e-9): DataFrame = {
@@ -117,23 +123,18 @@ object Events {
     val overlap = col("__ps") <= col("__te") && col("__pe") >= col("__ts")
     val predHit = p.join(t, keyEq && overlap, "left_semi")
     val truthHit = t.join(p, keyEq && overlap, "left_semi")
-    val nPred = p.groupBy(pk.map(col): _*).agg(count(lit(1)).as("n_pred_events"))
-      .select(pk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("n_pred_events"): _*)
-    val nTrue = t.groupBy(tk.map(col): _*).agg(count(lit(1)).as("n_true_events"))
-      .select(tk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("n_true_events"): _*)
-    val tpP = predHit.groupBy(pk.map(col): _*).agg(count(lit(1)).as("tp"))
-      .select(pk.zip(keys).map { case (a, k) => col(a).as(k) } :+ col("tp"): _*)
-    val tpT = truthHit.groupBy(tk.map(col): _*).agg(count(lit(1)).as("tp_true"))
-      .select(tk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("tp_true"): _*)
-    val allKeys = nPred.select(keys.map(col): _*)
-      .unionByName(nTrue.select(keys.map(col): _*)).distinct()
-    allKeys
-      .join(nPred, keys, "left").join(nTrue, keys, "left")
-      .join(tpP, keys, "left").join(tpT, keys, "left")
-      .na.fill(0, Seq("n_pred_events", "n_true_events", "tp", "tp_true"))
+    val counters = Seq("n_pred_events", "n_true_events", "tp", "tp_true")
+    def tagged(df: DataFrame, from: Seq[String], counter: String) =
+      df.select(from.zip(keys).map { case (a, k) => col(a).as(k) } ++
+        counters.map(c => lit(if (c == counter) 1L else 0L).as(c)): _*)
+    val keysSet = keys.map(col(_).isNotNull).reduce(_ && _)
+    val sums = counters.map(c =>
+      when(keysSet, sum(c)).otherwise(lit(0L)).as(c))
+    Seq(tagged(p, pk, "n_pred_events"), tagged(t, tk, "n_true_events"),
+        tagged(predHit, pk, "tp"), tagged(truthHit, tk, "tp_true"))
+      .reduce(_.unionByName(_))
+      .groupBy(keys.map(col): _*)
+      .agg(sums.head, sums.tail: _*)
       .select(keys.map(col) ++ Seq(
         col("tp"), (col("n_pred_events") - col("tp")).as("fp"),
         (col("n_true_events") - col("tp_true")).as("fn"),

@@ -1,12 +1,18 @@
 package graft.bench
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
 import graft.SparkSpec
 
 /** End-to-end pipeline runs on synthetic series with injected,
   * labeled anomalies — the full source → label → split → model →
   * sweep → metrics chain (E1-E3). */
 class PipelinesSpec extends SparkSpec {
+
+  /** Jobs one metrics JSON write of the Kalman fixture may start. */
+  private val MetricsWriteJobCeiling = 18
 
   /** Two series with seasonal structure and an injected anomaly burst in
     * each test region. A FRESH seeded RNG per call: a suite-shared
@@ -64,6 +70,53 @@ class PipelinesSpec extends SparkSpec {
     // predictions carry the annotated columns the reference persists
     assert(Seq("score", "detected", "is_anomaly", "split")
       .forall(pred.columns.contains))
+  }
+
+  /** Spark jobs started by `body`. The listener bus is asynchronous and
+    * delivers events in order, so a marker job run before and after
+    * `body` brackets exactly its jobs once the second marker is seen. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    val closed = Promise[Seq[Boolean]]()
+    val marker = "graft.jobs.marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val isMarker =
+          Option(e.properties).exists(_.getProperty(marker) != null)
+        starts += isMarker
+        if (starts.count(identity) == 2) closed.trySuccess(starts.toSeq)
+      }
+    }
+    def mark(): Unit = {
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark(); body; mark()
+      Await.result(closed.future, 60.seconds)
+        .dropWhile(!_).drop(1).takeWhile(!_).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("writing the Kalman metrics does not re-run the threshold sweep") {
+    // the sweep result is barriered once and joined by both consumers;
+    // a metrics frame that joined the lazy sweep instead re-runs all 17
+    // k candidates on every write (28 jobs here instead of 18). The
+    // ceiling is this fixture's count; raising it is a deliberate
+    // rebaseline.
+    val (series, labels) = fixture
+    val (_, metrics) = Pipelines.runKalman(series, labels, "series_id",
+      "ts", "value", Pipelines.Config(period = 24, rollingWindow = 24))
+    val dir = java.nio.file.Files.createTempDirectory("metrics").toString
+    try {
+      val jobs = jobsIn(graft.io.NabIo.writeMetricsJson(metrics, s"$dir/m"))
+      assert(jobs <= MetricsWriteJobCeiling, s"metrics write ran $jobs jobs")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("STL pipeline produces a winning k under the rate guard") {

@@ -90,6 +90,63 @@ class SeriesOpsSpec extends SparkSpec {
       ++ Seq.fill(3)("Test"))
   }
 
+  /** Split labels per series, in ts order, over a frame of series with
+    * the given lengths (series "s0", "s1", ...). */
+  private def splits(lengths: Seq[Int], trainFrac: Double,
+                     valFrac: Double): Map[String, Seq[String]] = {
+    import spark.implicits._
+    val rows = for {
+      (n, s) <- lengths.zipWithIndex
+      i <- 0 until n
+    } yield (s"s$s", java.sql.Timestamp.valueOf(
+      f"2024-01-01 00:${i / 60}%02d:${i % 60}%02d"), i.toDouble)
+    SeriesOps.withSplit(rows.toDF("series_id", "ts", "value"), "series_id",
+      "ts", trainFrac, valFrac)
+      .orderBy("series_id", "ts").collect().toSeq
+      .groupBy(_.getAs[String]("series_id"))
+      .map { case (k, rs) => k -> rs.map(_.getAs[String]("split")) }
+  }
+
+  private def iloc(n: Int, trainFrac: Double, valFrac: Double): Seq[String] = {
+    val a = (n * trainFrac).floor.toInt
+    val b = (n * (trainFrac + valFrac)).floor.toInt
+    Seq.fill(a)("Train") ++ Seq.fill(b - a)("Validation") ++
+      Seq.fill(n - b)("Test")
+  }
+
+  test("split of a 1-row series: floor(1 * frac) = 0 rows before Test") {
+    assert(splits(Seq(1), 0.5, 0.25) === Map("s0" -> Seq("Test")))
+    assert(splits(Seq(1), 1.0, 0.0) === Map("s0" -> Seq("Train")))
+  }
+
+  test("3-way split boundaries come from each series' own length") {
+    val lengths = Seq(10, 4, 7, 1, 8)
+    assert(splits(lengths, 0.5, 0.25) === lengths.zipWithIndex.map {
+      case (n, i) => s"s$i" -> iloc(n, 0.5, 0.25)
+    }.toMap)
+    assert(splits(Seq(8), 0.5, 0.25)("s0") === Seq.fill(4)("Train") ++
+      Seq.fill(2)("Validation") ++ Seq.fill(2)("Test"))
+  }
+
+  test("split at trainFrac 0 has no Train rows and at 1 only Train rows") {
+    assert(splits(Seq(6, 3), 0.0, 0.0) ===
+      Map("s0" -> Seq.fill(6)("Test"), "s1" -> Seq.fill(3)("Test")))
+    assert(splits(Seq(9), 0.0, 0.5) === Map(
+      "s0" -> (Seq.fill(4)("Validation") ++ Seq.fill(5)("Test"))))
+    assert(splits(Seq(6, 3), 1.0, 0.0) ===
+      Map("s0" -> Seq.fill(6)("Train"), "s1" -> Seq.fill(3)("Train")))
+  }
+
+  test("split drops null-keyed rows and leads with the series key") {
+    import spark.implicits._
+    val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val df = Seq((1.0, "a", t), (2.0, null, t))
+      .toDF("value", "series_id", "ts")
+    val out = SeriesOps.withSplit(df, "series_id", "ts", 0.5)
+    assert(out.columns.toSeq === Seq("series_id", "value", "ts", "split"))
+    assert(out.collect().map(_.getAs[String]("series_id")).toSeq === Seq("a"))
+  }
+
   test("MAD sigma matches 1.4826 * median(|x - median|)") {
     // values 1..9 with outlier 100: median=5, |x-5| medians...
     val vals = Seq(1, 2, 3, 4, 5, 6, 7, 8, 100).map(_.toDouble)

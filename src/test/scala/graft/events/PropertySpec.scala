@@ -91,6 +91,83 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** (series_id, k, start_rn, end_rn): the columns eventLevelMetrics
+    * reads from an eventize() output, plus the sweep's k key. */
+  private type Ev = (String, Double, Int, Int)
+
+  /** Plain-Scala J3 oracle: per key, pred events overlapping ANY true
+    * event (tp), true events overlapped by ANY pred (tp_true), and the
+    * record columns in eventLevelMetrics' output order after the keys. */
+  private def overlapOracle(pred: Seq[Ev], truth: Seq[Ev],
+                            key: Ev => Seq[Any]): Map[Seq[Any], Seq[Any]] = {
+    val eps = 1e-9
+    def hit(a: Ev, b: Ev) = a._3 <= b._4 && a._4 >= b._3
+    (pred ++ truth).map(key).distinct.map { kv =>
+      val p = pred.filter(key(_) == kv)
+      val t = truth.filter(key(_) == kv)
+      val tp = p.count(e => t.exists(hit(e, _))).toLong
+      val tpt = t.count(e => p.exists(hit(_, e))).toLong
+      val (np, nt) = (p.size.toLong, t.size.toLong)
+      val prec = tp / (np + eps)
+      val rec = tpt / (nt + eps)
+      kv -> Seq(tp, np - tp, nt - tpt, np, nt, prec, rec,
+        2.0 * prec * rec / (prec + rec + eps))
+    }.toMap
+  }
+
+  private def metricsByKey(pred: Seq[Ev], truth: Seq[Ev],
+                           keys: Seq[String]): Map[Seq[Any], Seq[Any]] = {
+    import spark.implicits._
+    val cols = Seq("series_id", "k", "start_rn", "end_rn")
+    val got = Events.eventLevelMetrics(pred.toDF(cols: _*),
+      truth.toDF(cols: _*), keys).collect()
+    got.map(r => r.toSeq.take(keys.size) -> r.toSeq.drop(keys.size)).toMap
+      .ensuring(_.size == got.length, "one row per key")
+  }
+
+  test("eventLevelMetrics equals a plain interval-overlap count") {
+    // own RNG: the suite-shared stream would shift every later test
+    val r = new scala.util.Random(77)
+    val grid = for (s <- Seq("a", "b", "c", "d"); k <- Seq(2.0, 2.5))
+      yield (s, k)
+    def events(keys: Seq[(String, Double)]): Seq[Ev] = keys.flatMap {
+      case (s, k) => Seq.fill(1 + r.nextInt(3)) {
+        val st = 1 + r.nextInt(40)
+        (s, k, st, st + r.nextInt(6))
+      }
+    }
+    val twoKeys: Ev => Seq[Any] = e => Seq(e._1, e._2)
+    val oneKey: Ev => Seq[Any] = e => Seq(e._1)
+    (1 to 6).foreach { _ =>
+      // 8 keys: 2 pred-only, 2 truth-only, 4 on both sides
+      val shuffled = r.shuffle(grid)
+      val pred = events(shuffled.take(6))
+      val truth = events(shuffled.drop(2))
+      assert(metricsByKey(pred, truth, Seq("series_id", "k")) ===
+        overlapOracle(pred, truth, twoKeys))
+      assert(metricsByKey(pred, truth, Seq("series_id")) ===
+        overlapOracle(pred, truth, oneKey))
+    }
+    // an empty side: every key comes from the other one
+    val some = events(grid.take(3))
+    Seq((some, Seq.empty[Ev]), (Seq.empty[Ev], some),
+        (Seq.empty[Ev], Seq.empty[Ev])).foreach { case (p, t) =>
+      assert(metricsByKey(p, t, Seq("series_id", "k")) ===
+        overlapOracle(p, t, twoKeys))
+    }
+  }
+
+  test("eventLevelMetrics gives a null key a zero-count group") {
+    // a null key never equi-joins, so its group counts nothing — the
+    // SQL oracle's LEFT JOIN USING reports the same zeros
+    val pred = Seq[Ev]((null, 2.0, 1, 3), ("a", 2.0, 1, 3))
+    val truth = Seq[Ev]((null, 2.0, 2, 4), ("a", 2.0, 2, 4))
+    val got = metricsByKey(pred, truth, Seq("series_id"))
+    assert(got(Seq(null)) === Seq(0L, 0L, 0L, 0L, 0L, 0.0, 0.0, 0.0))
+    assert(got(Seq("a")) === overlapOracle(pred.drop(1), truth.drop(1),
+      e => Seq(e._1))(Seq("a")))
+  }
+
   test("resolveComponents equals a union-find oracle on random graphs") {
     import spark.implicits._
     (1 to 5).foreach { _ =>
